@@ -23,8 +23,8 @@ object Bench {
     // untimed warmup against the BENCHMARKED dataset: file listings,
     // parquet footers, JIT + codegen — so the first timed query isn't
     // charged session spin-up
-    // go through the Tables loaders — events needs the nanos-as-long
-    // conf a raw read.parquet lacks
+    // go through the Tables loaders, so each file's footer is checked
+    // against its declared schema here and not inside a timed query
     val loaders: Seq[(String, (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame)] =
       Seq("region" -> Tables.region, "nation" -> Tables.nation,
           "customer" -> Tables.customer, "supplier" -> Tables.supplier,

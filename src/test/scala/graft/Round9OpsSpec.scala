@@ -50,8 +50,12 @@ class Round9OpsSpec extends SparkSpec {
       (101L, vec(0.866025, 0.5)),
       (102L, vec(0.0, -1.0)),
       (200L, vec(-1.0, 0.0))).toDF("vec_id", "embedding")
-    docs.coalesce(1).write.parquet(s"$d/documents.parquet")
-    embs.coalesce(1).write.parquet(s"$d/embeddings.parquet")
+    // the loaders check every declared column; rag06 reads only the ids,
+    // text and embedding, so the rest carry placeholders
+    docs.withColumn("lang", lit("en")).withColumn("source", lit("spec"))
+      .withColumn("n_chars", length(col("text")).cast("long"))
+      .coalesce(1).write.parquet(s"$d/documents.parquet")
+    embs.withColumn("label", lit(0)).coalesce(1).write.parquet(s"$d/embeddings.parquet")
     d
   }
 
